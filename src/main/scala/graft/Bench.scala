@@ -73,7 +73,7 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + round2(v) }
       .mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":${round2(total)},"unit":"sec","queries":$qs2dp,"sf":"$sfDir"}""")
+      s"""{"metric":"per_query","value":${round2(total)},"unit":"sec","queries":$qs2dp,"sf":"$sfDir"}""")
     // LAST stdout line: compact (~150 bytes), guaranteed to survive the
     // driver's tail capture
     println(

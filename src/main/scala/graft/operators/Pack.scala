@@ -54,8 +54,9 @@ object Pack {
     // checkpointed, shuffled exactly once by the window's hash Exchange.
     // Branch consistency no longer rests on physical partitioning: the
     // wide pid is a pure function of (orderCol value, boundaries).
-    // CONTRACT unchanged (unique total order) plus NON-NULL orderCol
-    // (boundaries are derived from its values).
+    // CONTRACT unchanged (unique total order). A null key sorts first:
+    // a range partition holding only it yields a null boundary, which
+    // the bucket expression places below every non-null key.
     val narrow = Pin.data(df
       .select(col(orderCol),
         coalesce(value.cast(LongType), lit(0L)).as("_pack_v"))

@@ -19,11 +19,13 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   *
   * Returns the count of boundaries strictly below the key (lower
   * bound): key ≤ boundaries(i) and key > boundaries(i-1) → i; key above
-  * every boundary → boundaries.length (the last partition). A null key
-  * maps to partition 0, matching the range partitioner's nulls-first
-  * order. Boundaries ride as expression literals (≤ the shuffle
-  * partition count — a config constant), same as the centroid/codebook
-  * literal pattern; O(log n) per row. */
+  * every boundary → boundaries.length (the last partition). Nulls sort
+  * FIRST, matching the range partitioner: a null key maps to partition
+  * 0, and a null boundary (the upper bound of a range partition that
+  * holds only null keys) lies below every non-null key. Boundaries
+  * ride as expression literals (≤ the shuffle partition count — a
+  * config constant), same as the centroid/codebook literal pattern;
+  * O(log n) per row. */
 case class RangeBucketExpr(child: Expression, boundaries: IndexedSeq[Any],
                            elemType: DataType)
     extends UnaryExpression with CodegenFallback {
@@ -47,7 +49,8 @@ case class RangeBucketExpr(child: Expression, boundaries: IndexedSeq[Any],
       var hi = boundaries.length
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
-        if (ord.lt(boundaries(mid), v)) lo = mid + 1 else hi = mid
+        val b = boundaries(mid)
+        if (b == null || ord.lt(b, v)) lo = mid + 1 else hi = mid
       }
       lo
     }

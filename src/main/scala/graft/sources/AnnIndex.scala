@@ -1,10 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Pq
+import graft.operators.{Pq, Sq}
 
 /** Persisted IVF-PQ index — the build-once / query-many shape every
   * production ANN deployment actually runs (Faiss `write_index` /
@@ -93,6 +94,22 @@ import graft.operators.Pq
   * (nlist, m×ncode rows), so load-time collects are a few KB
   * regardless of corpus size.
   *
+  * TWO FAMILIES, ONE WRITE PATH: an index is IVF-PQ ([[load]],
+  * [[topK]]) or SQ8 — per-dimension affine byte codes, flat or
+  * cell-partitioned ([[loadSq]], [[topKSq]]). Every writer verb (build,
+  * append, upsert, their streams, merge, retrain, split, rebalance) and
+  * cellStats is ONE implementation over a private `Codec`, which owns
+  * the three decisions the families differ on: the ENCODE projection
+  * ([[Pq.ivfPqEncode]] vs SQ8 codes + reconstruction norm, plus the
+  * `cell` partition column when the index has a coarse quantizer); the
+  * MODEL ARTIFACTS (which tables land under a model root, and how they
+  * read back — one `meta` read, keyed on its `kind` column, decides);
+  * and MODEL IDENTITY (bit-equality for [[merge]], a grown centroid
+  * table for [[splitCell]]). The manifest, commit, tombstone, kill-point
+  * and policy logic exists once. The `…Sq` verbs forward with the
+  * family they serve, so a verb that meets an index of the other family
+  * fails loudly before it stages anything.
+  *
   * MIGRATION (pre-high-water manifests): a manifest written before the
   * `shw` line existed came from the era whose streamed micro-batch `id`
   * landed as segment id `id + 1` (build owned segment 0, the stream
@@ -174,21 +191,6 @@ object AnnIndex {
       .maxOption
   }
 
-  /** Parse manifest `id`. A `v2` manifest (create-exclusive-published)
-    * must end with its `commit` sentinel — a reader racing the
-    * few-hundred-byte body write sees a truncated file and RETRIES
-    * briefly before failing loudly (never silently parses a partial
-    * snapshot). A non-`v2` file is accepted as a LEGACY manifest
-    * (rename-published, hence content-atomic) only when it contains at
-    * least one recognized manifest line — a torn read whose visible
-    * prefix is shorter than the `v2` header must retry like any other
-    * truncation, never parse as an empty index. Legacy manifests
-    * default hw = max listed id, and their stream high-water is
-    * NORMALIZED to `max segment id − 1` — the committed high-water
-    * their era's sequential `segment id = batch id + 1` scheme implies
-    * (see the MIGRATION doc on the object) — so every downstream dedup
-    * check, carry-forward and publish handles old-format indexes with
-    * no special casing. */
   /** Reader retry budget for a sentinel-less manifest (25 ms apart —
     * 3 s at the default): long enough that a LIVE publisher's
     * few-hundred-byte body write always lands within it, short enough
@@ -209,6 +211,21 @@ object AnnIndex {
   private val legacyShwWarned =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** Parse manifest `id`. A `v2` manifest (create-exclusive-published)
+    * must end with its `commit` sentinel — a reader racing the
+    * few-hundred-byte body write sees a truncated file and RETRIES
+    * briefly before failing loudly (never silently parses a partial
+    * snapshot). A non-`v2` file is accepted as a LEGACY manifest
+    * (rename-published, hence content-atomic) only when it contains at
+    * least one recognized manifest line — a torn read whose visible
+    * prefix is shorter than the `v2` header must retry like any other
+    * truncation, never parse as an empty index. Legacy manifests
+    * default hw = max listed id, and their stream high-water is
+    * NORMALIZED to `max segment id − 1` — the committed high-water
+    * their era's sequential `segment id = batch id + 1` scheme implies
+    * (see the MIGRATION doc on the object) — so every downstream dedup
+    * check, carry-forward and publish handles old-format indexes with
+    * no special casing. */
   private def readManifest(f: org.apache.hadoop.fs.FileSystem, dir: String,
                            id: Long): ManifestData = {
     val retryBudget = Option(manifestRetryOverride.get(dir))
@@ -685,50 +702,212 @@ object AnnIndex {
     }
   }
 
-  /** Row count of a just-written segment WITHOUT reading it when it is
-    * empty: a zero-row partitioned write leaves a `_SUCCESS`-only tree,
-    * and `spark.read.parquet` on it fails schema inference — on the
-    * streaming path that failure replays forever (the wedged-checkpoint
-    * trap). A data-file listing decides emptiness first. */
-  /** Write `df` as a parquet segment (optionally cell-partitioned) and
-    * return its row count, observed DURING the write job
-    * (`Dataset.observe` — a CollectMetrics node rides the written
-    * plan): the read-back count job and its directory re-listing per
-    * verb (the previous `countSegment`) are gone. Equal to counting
-    * the landed files for any successful write — segment/tombstone names are
-    * fresh per verb, so nothing else ever writes the path; on a failed
-    * write the caller never reaches the count. */
-  private def writeCounted(df: DataFrame, dest: String,
-                           cellPartitioned: Boolean): Long = {
+  /** Write `df` as a parquet artifact and return its row count, observed
+    * DURING the write job (`Dataset.observe` — a CollectMetrics node
+    * rides the written plan, so no read-back count job or directory
+    * re-listing per verb). Equal to counting the landed files for any
+    * successful write — segment/tombstone names are fresh per verb, so
+    * nothing else ever writes the path; on a failed write the caller
+    * never reaches the count. A frame carrying a `cell` column is a
+    * cell-partitioned segment: its rows are shuffled by cell before the
+    * partitioned write so each segment holds ≤ nlist files (one per
+    * populated cell) instead of tasks × cells small files — the
+    * file-count term that otherwise dominates manifest-union listings
+    * as segments accumulate. The shuffle moves codes — post-compression
+    * bytes, not vectors. */
+  private def writeCounted(df: DataFrame, dest: String): Long = {
+    val cells = df.columns.contains("cell")
     val obs = new org.apache.spark.sql.Observation()
-    val w = df.observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
-    (if (cellPartitioned) w.partitionBy("cell") else w).parquet(dest)
+    val w = (if (cells) df.repartition(col("cell")) else df)
+      .observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
+    (if (cells) w.partitionBy("cell") else w).parquet(dest)
     obs.get("n").asInstanceOf[Long]
   }
 
-  /** Encode `delta` with the index model and land it as segment
-    * `batch-<id>` (complete before the caller publishes a manifest).
-    * The encode input is spread across cores first (a compact delta
-    * arrives as ONE file → one scan split → the whole encode serializes
-    * on one task — the landing-dir trap), and the ENCODED rows are
-    * shuffled by cell before the partitioned write so each segment
-    * holds ≤ nlist files (one per populated cell) instead of
-    * tasks × cells small files — the file-count term that otherwise
-    * dominates manifest-union listings as segments accumulate. The
-    * shuffle moves (id, cell, codes) — post-compression bytes, not
-    * vectors — and at production nlist (thousands, [[graft.operators
-    * .Similarity.autoNlist]]) it is as parallel as the cluster. */
-  private def writeSegment(delta: DataFrame, idCol: String, vecCol: String,
-                           dir: String, segName: String,
-                           centroids: Array[Array[Double]],
-                           cbs: Array[Array[Array[Double]]]): Long = {
-    val spark = delta.sparkSession
-    val seg = s"$dir/data/$segName"
-    val enc = Pq.ivfPqEncode(graft.operators.Spread.toCores(delta), idCol,
-        vecCol, centroids, cbs)
-      .withColumnRenamed("_cell", "cell")
-    writeCounted(enc.repartition(col("cell")), seg, cellPartitioned = true)
+  // ---- codecs: the only write-side difference between the families --
+
+  /** The two index families: SQ8 as its `meta` table's `kind` column
+    * stores it; IVF-PQ, whose tables predate the column, reads it null. */
+  private[graft] val IvfPqKind = "IVF-PQ"
+  private[graft] val Sq8Kind = "sq8"
+
+  // Model-table schemas (fixed: written by this object). Explicit
+  // schemas make every model read inference-free: a bare
+  // spark.read.parquet runs a footer-reading schema-inference job per
+  // call, and the writer verbs open these parameter-sized tables on
+  // every append/upsert/merge/split. The meta schema is the union of
+  // both families' columns — the absent ones read null.
+  private val metaSchema =
+    StructType.fromDDL("dim INT, nlist INT, m INT, ncode INT, kind STRING")
+  private val centroidsSchema =
+    StructType.fromDDL("cell INT, vec ARRAY<DOUBLE>")
+  private val codebooksSchema =
+    StructType.fromDDL("s INT, code INT, vec ARRAY<DOUBLE>")
+  private val sqModelSchema =
+    StructType.fromDDL("i INT, mn DOUBLE, step DOUBLE, inv DOUBLE")
+  private val tombSchema = StructType.fromDDL("neighbor_id BIGINT")
+
+  /** An index family's model, and the three decisions the writer verbs
+    * delegate to it: how rows ENCODE into segment rows, which MODEL
+    * TABLES land under a model root, and model IDENTITY ([[sameModel]]
+    * for merge, [[withCentroids]] for splits). */
+  private sealed trait Codec {
+    /** The coarse quantizer; segments are cell-partitioned iff set. */
+    def cells: Option[Array[Array[Double]]]
+    /** `(idCol, vecCol)` rows → segment rows: `neighbor_id`, the
+      * codes, and `cell` (nearest centroid of the RAW vector) when
+      * [[cells]] is set. */
+    def encode(rows: DataFrame, idCol: String, vecCol: String): DataFrame
+    /** Land the parameter-sized model tables under `root` — the index
+      * root for a build (model version 0), a fresh `model-<uniq>/` for
+      * a retrain or split. */
+    def writeModel(spark: SparkSession, root: String): Unit
+    /** Bit-equal models: codes are only comparable under one model. */
+    def sameModel(other: Codec): Boolean
+    /** This model over a grown coarse quantizer (a split). */
+    def withCentroids(cents: Array[Array[Double]]): Codec
   }
+
+  private def deep(a: Array[Array[Double]]): Seq[Seq[Double]] =
+    a.map(_.toSeq).toSeq
+
+  private def writeTable(df: DataFrame, dest: String): Unit =
+    df.repartition(1).write.mode("overwrite").parquet(dest)
+
+  private def writeCentroids(spark: SparkSession, root: String,
+                             cents: Array[Array[Double]]): Unit = {
+    import spark.implicits._
+    writeTable(cents.zipWithIndex.map { case (v, i) => (i + 1, v.toSeq) }
+      .toSeq.toDF("cell", "vec"), s"$root/centroids")
+  }
+
+  /** IVF-PQ: assignment + residual + PQ encode fused into one map-only
+    * projection ([[Pq.ivfPqEncode]]); tables `centroids/`,
+    * `codebooks/`, `meta/`. */
+  private final case class IvfPq(centroids: Array[Array[Double]],
+                                 cbs: Array[Array[Array[Double]]])
+      extends Codec {
+    def cells: Option[Array[Array[Double]]] = Some(centroids)
+    def encode(rows: DataFrame, idCol: String, vecCol: String): DataFrame =
+      Pq.ivfPqEncode(rows, idCol, vecCol, centroids, cbs)
+        .withColumnRenamed("_cell", "cell")
+    def writeModel(spark: SparkSession, root: String): Unit = {
+      import spark.implicits._
+      writeCentroids(spark, root, centroids)
+      writeTable(cbs.zipWithIndex
+        .flatMap { case (cb, s) =>
+          cb.zipWithIndex.map { case (v, j) => (s, j + 1, v.toSeq) } }.toSeq
+        .toDF("s", "code", "vec"), s"$root/codebooks")
+      writeTable(Seq((centroids.head.length, centroids.length, cbs.length,
+          cbs.head.length)).toDF("dim", "nlist", "m", "ncode"), s"$root/meta")
+    }
+    def sameModel(other: Codec): Boolean = other match {
+      case IvfPq(c, b) =>
+        deep(centroids) == deep(c) && cbs.map(deep).toSeq == b.map(deep).toSeq
+      case _ => false
+    }
+    def withCentroids(cents: Array[Array[Double]]): Codec =
+      copy(centroids = cents)
+  }
+
+  /** SQ8: per-dimension affine byte codes + the reconstruction norm
+    * ([[Sq.encodeExpr]], [[Sq.reconNormExpr]]), flat or — with a coarse
+    * quantizer — cell-partitioned; tables `model/`, `meta/` and the
+    * optional `centroids/`. SQ codes do not depend on the cell, so a
+    * split's re-encode reproduces them bit-identically and only re-keys
+    * the rows. */
+  private final case class Sq8(model: Sq.Model,
+                               centroids: Option[Array[Array[Double]]])
+      extends Codec {
+    def cells: Option[Array[Array[Double]]] = centroids
+    def encode(rows: DataFrame, idCol: String, vecCol: String): DataFrame =
+      centroids match {
+        case None => Sq.encode(rows, idCol, vecCol, model)
+        case Some(cents) =>
+          import graft.plans.SketchExpressions.nearestCentroids
+          rows.select(col(idCol).as("neighbor_id"),
+              Sq.encodeExpr(col(vecCol), model).as("codes"),
+              element_at(nearestCentroids(col(vecCol), cents, 1), 1).as("cell"))
+            .withColumn("recon_norm", Sq.reconNormExpr(col("codes"), model))
+      }
+    def writeModel(spark: SparkSession, root: String): Unit = {
+      import spark.implicits._
+      writeTable((0 until model.dim)
+        .map(i => (i, model.mins(i), model.steps(i), model.invSteps(i)))
+        .toDF("i", "mn", "step", "inv"), s"$root/model")
+      writeTable(Seq((model.dim, Sq8Kind)).toDF("dim", "kind"), s"$root/meta")
+      centroids.foreach(writeCentroids(spark, root, _))
+    }
+    def sameModel(other: Codec): Boolean = other match {
+      case Sq8(m, c) =>
+        model.mins.toSeq == m.mins.toSeq &&
+          model.steps.toSeq == m.steps.toSeq && centroids.map(deep) == c.map(deep)
+      case _ => false
+    }
+    def withCentroids(cents: Array[Array[Double]]): Codec =
+      copy(centroids = Some(cents))
+  }
+
+  /** The manifest's model root: version 0 lives at the index root,
+    * every retrain under its own `model-<uniq>/`. */
+  private def modelRoot(dir: String, md: ManifestData): String =
+    if (md.modelDir.isEmpty) dir else s"$dir/${md.modelDir}"
+
+  /** Read ONLY the model tables of a pinned manifest — the writer verbs
+    * need the encode model and nothing else; opening the snapshot would
+    * also read a segment schema to assemble a visible union the writer
+    * never evaluates. One `meta` read decides the family by its `kind`;
+    * `kind` is the family the calling verb serves, and the other family
+    * fails loudly here — before anything is staged. */
+  private def readCodec(spark: SparkSession, dir: String, md: ManifestData,
+                        kind: String): Codec = {
+    val mroot = modelRoot(dir, md)
+    val meta = spark.read.schema(metaSchema)
+      .parquet(s"$mroot/meta").collect().head
+    val got = Option(meta.getAs[String]("kind")).getOrElse(IvfPqKind)
+    require(kind == got, s"$dir is not an $kind index (meta kind=$got)")
+    val dim = meta.getAs[Int]("dim")
+    def centroids(): Array[Array[Double]] = spark.read.schema(centroidsSchema)
+      .parquet(s"$mroot/centroids")
+      .orderBy("cell").collect()
+      .map(_.getSeq[Double](1).toArray)
+    if (got == IvfPqKind) {
+      val (nlist, m, ncode) =
+        (meta.getAs[Int]("nlist"), meta.getAs[Int]("m"), meta.getAs[Int]("ncode"))
+      val cents = centroids()
+      require(cents.length == nlist && cents.forall(_.length == dim),
+        s"centroids table does not match meta ($nlist x $dim)")
+      val cbRows = spark.read.schema(codebooksSchema)
+        .parquet(s"$mroot/codebooks")
+        .orderBy("s", "code").collect()
+      require(cbRows.length == m * ncode,
+        s"codebooks table does not match meta ($m x $ncode)")
+      IvfPq(cents, cbRows.grouped(ncode)
+        .map(_.map(_.getSeq[Double](2).toArray).toArray).toArray)
+    } else {
+      val rows = spark.read.schema(sqModelSchema)
+        .parquet(s"$mroot/model").orderBy("i").collect()
+      require(rows.length == dim, s"model table does not match meta ($dim dims)")
+      val cents =
+        if (!fs(spark, dir).exists(path(s"$mroot/centroids"))) None
+        else Some(centroids())
+      cents.foreach(c => require(c.forall(_.length == dim),
+        s"centroids table does not match meta (dim $dim)"))
+      Sq8(Sq.Model(rows.map(_.getAs[Double]("mn")),
+        rows.map(_.getAs[Double]("step")), rows.map(_.getAs[Double]("inv"))),
+        cents)
+    }
+  }
+
+  /** Encode `delta` with `codec` and land it as segment `segName`
+    * (complete before the caller publishes a manifest). The encode input
+    * is spread across cores first: a compact delta arrives as ONE file →
+    * one scan split → the whole encode serializes on one task (the
+    * landing-dir trap). */
+  private def writeSegment(delta: DataFrame, idCol: String, vecCol: String,
+                           dir: String, segName: String, codec: Codec): Long =
+    writeCounted(codec.encode(graft.operators.Spread.toCores(delta), idCol,
+      vecCol), s"$dir/data/$segName")
 
   /** The snapshot's visible code union: each live segment masked by the
     * tombstone sets with a HIGHER id (sequence-number rule — a
@@ -761,6 +940,18 @@ object AnnIndex {
     }.reduce(_ unionByName _)
   }
 
+  /** Pin a generation (see [[resolveReadManifest]]) and open it: the
+    * codec its manifest's model pointer names — a reader pinned before
+    * a [[retrain]] keeps scoring with the model its segments were
+    * encoded with — and the visible union of its segments. */
+  private def openSnapshot(spark: SparkSession, dir: String,
+                           asOf: Option[Long], kind: String)
+      : (ManifestData, Codec, DataFrame) = {
+    val (_, md) = resolveReadManifest(fs(spark, dir), dir, asOf)
+    val codec = readCodec(spark, dir, md, kind)
+    (md, codec, visibleUnion(spark, dir, md))
+  }
+
   /** Build and atomically publish a FRESH index at `dir` (replacing any
     * index already there). The corpus pass is [[Pq.ivfPqEncode]] —
     * assignment + residual + PQ encode fused into one map-only
@@ -770,114 +961,26 @@ object AnnIndex {
     * rebuild-over-live-index requires writers and readers of the OLD
     * directory to be stopped first; for an in-place model migration
     * that keeps them running, use [[retrain]]. */
-  /** Land the parameter-sized IVF-PQ model tables (centroids,
-    * codebooks, meta) under `root` — the build writes them at the
-    * index root (model version 0), [[retrain]] under a fresh
-    * `model-<uniq>/` directory. */
-  private def writeModelArtifacts(spark: SparkSession, root: String,
-                                  centroids: Array[Array[Double]],
-                                  cbs: Array[Array[Array[Double]]]): Unit = {
-    import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (v, i) => (i + 1, v.toSeq) }.toSeq
-      .toDF("cell", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$root/centroids")
-    cbs.zipWithIndex
-      .flatMap { case (cb, s) =>
-        cb.zipWithIndex.map { case (v, j) => (s, j + 1, v.toSeq) } }.toSeq
-      .toDF("s", "code", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$root/codebooks")
-    Seq((centroids.head.length, centroids.length, cbs.length,
-        cbs.head.length))
-      .toDF("dim", "nlist", "m", "ncode")
-      .repartition(1).write.mode("overwrite").parquet(s"$root/meta")
-  }
-
-  // ---- model-table schemas (fixed: written by this object) ---------
-  // Explicit schemas make every model read inference-free: a bare
-  // spark.read.parquet runs a footer-reading schema-inference job per
-  // call, and the writer verbs open these parameter-sized tables on
-  // every append/upsert/merge/split.
-  private val ivfMetaSchema =
-    StructType.fromDDL("dim INT, nlist INT, m INT, ncode INT, kind STRING")
-  private val sqMetaSchema = StructType.fromDDL("dim INT, kind STRING")
-  private val centroidsSchema =
-    StructType.fromDDL("cell INT, vec ARRAY<DOUBLE>")
-  private val codebooksSchema =
-    StructType.fromDDL("s INT, code INT, vec ARRAY<DOUBLE>")
-  private val sqModelSchema =
-    StructType.fromDDL("i INT, mn DOUBLE, step DOUBLE, inv DOUBLE")
-  private val tombSchema = StructType.fromDDL("neighbor_id BIGINT")
-
-  /** The manifest's model root: version 0 lives at the index root,
-    * every retrain under its own `model-<uniq>/`. */
-  private def modelRoot(dir: String, md: ManifestData): String =
-    if (md.modelDir.isEmpty) dir else s"$dir/${md.modelDir}"
-
-  /** Read ONLY the IVF-PQ model tables of a pinned manifest — the
-    * writer verbs (append/upsert/merge-dst) need the encode model and
-    * nothing else; a full [[load]] would also open every live segment
-    * (one schema read each) to assemble a visible union the writer
-    * never evaluates. */
-  private def readIvfModel(spark: SparkSession, dir: String,
-                           md: ManifestData)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val mroot = modelRoot(dir, md)
-    val meta = spark.read.schema(ivfMetaSchema)
-      .parquet(s"$mroot/meta").collect().head
-    require(meta.getAs[String]("kind") == null,
-      s"$dir is not an IVF-PQ index (meta kind=${meta.getAs[String]("kind")})")
-    val (dim, nlist, m, ncode) =
-      (meta.getAs[Int]("dim"), meta.getAs[Int]("nlist"),
-        meta.getAs[Int]("m"), meta.getAs[Int]("ncode"))
-    val cents = spark.read.schema(centroidsSchema)
-      .parquet(s"$mroot/centroids")
-      .orderBy("cell").collect()
-      .map(_.getSeq[Double](1).toArray)
-    require(cents.length == nlist && cents.forall(_.length == dim),
-      s"centroids table does not match meta ($nlist x $dim)")
-    val cbRows = spark.read.schema(codebooksSchema)
-      .parquet(s"$mroot/codebooks")
-      .orderBy("s", "code").collect()
-    require(cbRows.length == m * ncode,
-      s"codebooks table does not match meta ($m x $ncode)")
-    val cbs = cbRows.grouped(ncode)
-      .map(_.map(_.getSeq[Double](2).toArray).toArray).toArray
-    (cents, cbs)
-  }
-
-  /** [[readIvfModel]]'s SQ8 twin: affine model + optional coarse
-    * quantizer, nothing else. */
-  private def readSqModel(spark: SparkSession, dir: String,
-                          md: ManifestData)
-      : (graft.operators.Sq.Model, Option[Array[Array[Double]]]) = {
-    val f = fs(spark, dir)
-    val mroot = modelRoot(dir, md)
-    val meta = spark.read.schema(sqMetaSchema)
-      .parquet(s"$mroot/meta").collect().head
-    require(meta.getAs[String]("kind") == "sq8", s"$dir is not an sq8 index")
-    val dim = meta.getAs[Int]("dim")
-    val rows = spark.read.schema(sqModelSchema)
-      .parquet(s"$mroot/model").orderBy("i").collect()
-    require(rows.length == dim, s"model table does not match meta ($dim dims)")
-    val m = graft.operators.Sq.Model(
-      rows.map(_.getAs[Double]("mn")),
-      rows.map(_.getAs[Double]("step")),
-      rows.map(_.getAs[Double]("inv")))
-    val cents =
-      if (!f.exists(path(s"$mroot/centroids"))) None
-      else Some(spark.read.schema(centroidsSchema)
-        .parquet(s"$mroot/centroids")
-        .orderBy("cell").collect()
-        .map(_.getSeq[Double](1).toArray))
-    cents.foreach(c => require(c.forall(_.length == dim),
-      s"centroids table does not match meta (dim $dim)"))
-    (m, cents)
-  }
-
   def buildIvfPq(corpus: DataFrame, idCol: String, vecCol: String,
                  dir: String, centroids: Array[Array[Double]],
-                 cbs: Array[Array[Array[Double]]]): Unit = {
+                 cbs: Array[Array[Array[Double]]]): Unit =
+    buildImpl(corpus, idCol, vecCol, dir, IvfPq(centroids, cbs))
+
+  /** Build and atomically publish a fresh SQ8 index at `dir` — same
+    * staging/manifest protocol as [[buildIvfPq]], with the
+    * parameter-sized model persisted as (i, mn, step, inv) rows.
+    * Passing `centroids` (typically the IVF tier's coarse quantizer)
+    * produces the CELL-PARTITIONED layout: segments carry a `cell`
+    * partition column, the centroids persist beside the model, and
+    * [[topKSq]] gains the probe-pruned read path — while the default
+    * full scan stays hash-identical to the flat layout (q155's gate). */
+  def buildSq(corpus: DataFrame, idCol: String, vecCol: String,
+              dir: String, m: Sq.Model,
+              centroids: Option[Array[Array[Double]]] = None): Unit =
+    buildImpl(corpus, idCol, vecCol, dir, Sq8(m, centroids))
+
+  private def buildImpl(corpus: DataFrame, idCol: String, vecCol: String,
+                        dir: String, codec: Codec): Unit = {
     val spark = corpus.sparkSession
     val f = fs(spark, dir)
     val target = path(dir)
@@ -886,10 +989,9 @@ object AnnIndex {
     val tmp = path(parent.toString + s"/_tmp.${target.getName}")
     f.delete(tmp, true)
 
-    writeModelArtifacts(spark, tmp.toString, centroids, cbs)
+    codec.writeModel(spark, tmp.toString)
     val segName = freshName("batch-")
-    val n = writeSegment(corpus, idCol, vecCol, tmp.toString, segName,
-      centroids, cbs)
+    val n = writeSegment(corpus, idCol, vecCol, tmp.toString, segName, codec)
     writeManifest(f, tmp.toString, 0L,
       ManifestData(Seq(Art(0L, n, segName)), Seq.empty, hw = 0L, shw = -1L))
 
@@ -934,15 +1036,25 @@ object AnnIndex {
     * the winner's high-water mark in the manifest line — no data
     * moves, and both commits survive in adjacent generations. */
   def appendIvfPq(delta: DataFrame, idCol: String, vecCol: String,
-                  dir: String, dedupKey: Option[Long] = None): Unit = {
+                  dir: String, dedupKey: Option[Long] = None): Unit =
+    appendImpl(delta, idCol, vecCol, dir, dedupKey, IvfPqKind)
+
+  /** [[appendIvfPq]] on an SQ8 index. */
+  def appendSq(delta: DataFrame, idCol: String, vecCol: String,
+               dir: String, dedupKey: Option[Long] = None): Unit =
+    appendImpl(delta, idCol, vecCol, dir, dedupKey, Sq8Kind)
+
+  private def appendImpl(delta: DataFrame, idCol: String, vecCol: String,
+                         dir: String, dedupKey: Option[Long],
+                         kind: String): Unit = {
     val spark = delta.sparkSession
     val f = fs(spark, dir)
     val (mid, md) = refresh(f, dir)
     if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
     maybeKill(dir, "stage")
-    val (cents, cbs) = readIvfModel(spark, dir, md)
+    val codec = readCodec(spark, dir, md, kind)
     val segName = freshName("batch-")
-    val n = writeSegment(delta, idCol, vecCol, dir, segName, cents, cbs)
+    val n = writeSegment(delta, idCol, vecCol, dir, segName, codec)
     if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
     commitWithRetry(f, dir, (mid, md),
       m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
@@ -961,13 +1073,25 @@ object AnnIndex {
     * isolation — a query serving from [[load]] never observes a
     * half-applied micro-batch. */
   def streamAppend(updates: DataFrame, idCol: String, vecCol: String,
-                   dir: String, checkpoint: String,
-                   trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+                   dir: String, checkpoint: String, trigger: Trigger)
+      : StreamingQuery =
+    streamImpl(updates, checkpoint, trigger)((batch, id) =>
+      appendImpl(batch, idCol, vecCol, dir, Some(id), IvfPqKind))
+
+  /** [[streamAppend]] into an SQ8 index. */
+  def streamAppendSq(updates: DataFrame, idCol: String, vecCol: String,
+                     dir: String, checkpoint: String, trigger: Trigger)
+      : StreamingQuery =
+    streamImpl(updates, checkpoint, trigger)((batch, id) =>
+      appendImpl(batch, idCol, vecCol, dir, Some(id), Sq8Kind))
+
+  /** Run a keyed writer verb once per micro-batch, the foreachBatch id
+    * as its dedup key — the shared body of the streaming verbs. */
+  private def streamImpl(updates: DataFrame, checkpoint: String,
+                         trigger: Trigger)
+                        (verb: (DataFrame, Long) => Unit): StreamingQuery =
     updates.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        appendIvfPq(batch.toDF(), idCol, vecCol, dir, dedupKey = Some(id))
-      }
+      .foreachBatch { (batch: Dataset[Row], id: Long) => verb(batch.toDF(), id) }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .start()
@@ -988,20 +1112,30 @@ object AnnIndex {
     * keep the versioned raw table and the index in lockstep (the
     * `stream_index_upsert_parity` harness runs exactly that). */
   def upsertBatchIvfPq(batch: DataFrame, idCol: String, vecCol: String,
-                       dir: String, dedupKey: Option[Long] = None): Unit = {
+                       dir: String, dedupKey: Option[Long] = None): Unit =
+    upsertImpl(batch, idCol, vecCol, dir, dedupKey, IvfPqKind)
+
+  /** [[upsertBatchIvfPq]] on an SQ8 index. */
+  def upsertBatchSq(batch: DataFrame, idCol: String, vecCol: String,
+                    dir: String, dedupKey: Option[Long] = None): Unit =
+    upsertImpl(batch, idCol, vecCol, dir, dedupKey, Sq8Kind)
+
+  private def upsertImpl(batch: DataFrame, idCol: String, vecCol: String,
+                         dir: String, dedupKey: Option[Long],
+                         kind: String): Unit = {
     val spark = batch.sparkSession
     val f = fs(spark, dir)
     val (mid, md) = refresh(f, dir)
     if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
     maybeKill(dir, "stage")
-    val (cents, cbs) = readIvfModel(spark, dir, md)
+    val codec = readCodec(spark, dir, md, kind)
     val segName = freshName("batch-")
     val tombName = freshName("t-")
-    val n = writeSegment(batch, idCol, vecCol, dir, segName, cents, cbs)
+    val n = writeSegment(batch, idCol, vecCol, dir, segName, codec)
     if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
     val tn = writeCounted(
       batch.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
-      s"$dir/tomb/$tombName", cellPartitioned = false)
+      s"$dir/tomb/$tombName")
     commitWithRetry(f, dir, (mid, md),
       m => m.copy(segs = m.segs :+ Art(m.nextId + 1, n, segName),
         tombs = m.tombs :+ Art(m.nextId, tn, tombName),
@@ -1017,16 +1151,17 @@ object AnnIndex {
     * vectors are tombstone-masked and physically dropped by the next
     * [[compact]]. */
   def streamUpsert(updates: DataFrame, idCol: String, vecCol: String,
-                   dir: String, checkpoint: String,
-                   trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        upsertBatchIvfPq(batch.toDF(), idCol, vecCol, dir, dedupKey = Some(id))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+                   dir: String, checkpoint: String, trigger: Trigger)
+      : StreamingQuery =
+    streamImpl(updates, checkpoint, trigger)((batch, id) =>
+      upsertImpl(batch, idCol, vecCol, dir, Some(id), IvfPqKind))
+
+  /** [[streamUpsert]] into an SQ8 index. */
+  def streamUpsertSq(updates: DataFrame, idCol: String, vecCol: String,
+                     dir: String, checkpoint: String, trigger: Trigger)
+      : StreamingQuery =
+    streamImpl(updates, checkpoint, trigger)((batch, id) =>
+      upsertImpl(batch, idCol, vecCol, dir, Some(id), Sq8Kind))
 
   /** Tombstone `ids` (one column named `idCol`) out of the CURRENT
     * snapshot — the takedown/eviction verb: the id set lands as an
@@ -1047,7 +1182,7 @@ object AnnIndex {
     val tombName = freshName("t-")
     val n = writeCounted(
       ids.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
-      s"$dir/tomb/$tombName", cellPartitioned = false)
+      s"$dir/tomb/$tombName")
     if (n == 0) { f.delete(path(s"$dir/tomb/$tombName"), true); return }
     // a re-based delete applies AS OF ITS COMMIT: a fresh tombstone id
     // (> every committed segment) also masks matching rows a concurrent
@@ -1082,13 +1217,7 @@ object AnnIndex {
       maybeKill(dir, "stage")
       if (md.segs.length <= 1 && md.tombs.isEmpty) return
       val segName = freshName("batch-")
-      val union = visibleUnion(spark, dir, md)
-      val n =
-        if (union.columns.contains("cell"))
-          writeCounted(union.repartition(col("cell")),
-            s"$dir/data/$segName", cellPartitioned = true)
-        else writeCounted(union, s"$dir/data/$segName",
-          cellPartitioned = false)
+      val n = writeCounted(visibleUnion(spark, dir, md), s"$dir/data/$segName")
       if (n == 0) {
         f.delete(path(s"$dir/data/$segName"), true)
         throw new IllegalStateException(
@@ -1134,27 +1263,34 @@ object AnnIndex {
     * duplicated across shards stay duplicated, exactly like append;
     * route overlapping corrections through [[upsertBatchIvfPq]]. `src`
     * is untouched (drop or [[expire]] it after the merge commits). */
-  def merge(spark: SparkSession, dstDir: String, srcDir: String): Unit = {
+  def merge(spark: SparkSession, dstDir: String, srcDir: String): Unit =
+    mergeImpl(spark, dstDir, srcDir, IvfPqKind)
+
+  /** [[merge]] of SQ8 shards: bit-equal affine models AND the same
+    * coarse quantizer (or none) — the copied rows keep their `cell`
+    * column, so the destination's layout carries over. */
+  def mergeSq(spark: SparkSession, dstDir: String, srcDir: String): Unit =
+    mergeImpl(spark, dstDir, srcDir, Sq8Kind)
+
+  private def mergeImpl(spark: SparkSession, dstDir: String, srcDir: String,
+                        kind: String): Unit = {
     require(dstDir != srcDir, "cannot merge an index into itself")
     val f = fs(spark, dstDir)
     val (mid, md) = refresh(f, dstDir)
     maybeKill(dstDir, "stage")
-    val (dstCents, dstCbs) = readIvfModel(spark, dstDir, md)
-    val src = load(spark, srcDir)
-    require(dstCents.map(_.toSeq).toSeq == src.centroids.map(_.toSeq).toSeq &&
-        dstCbs.map(_.map(_.toSeq).toSeq).toSeq == src.cbs.map(_.map(_.toSeq).toSeq).toSeq,
-      s"model mismatch: $srcDir was not built with $dstDir's " +
-        "centroids/codebooks — codes are not comparable across models")
+    val dst = readCodec(spark, dstDir, md, kind)
+    val (_, src, rows) = openSnapshot(spark, srcDir, None, kind)
+    require(dst.sameModel(src),
+      s"model mismatch: $srcDir was not built with $dstDir's model — " +
+        "codes are not comparable across models")
     val segName = freshName("batch-")
-    val copied = src.codes
-      .select(col("neighbor_id"), col("_cell").as("cell"), col("codes"))
-    val n = writeCounted(copied.repartition(col("cell")),
-      s"$dstDir/data/$segName", cellPartitioned = true)
-    if (n == 0) { f.delete(path(s"$dstDir/data/$segName"), true); return }
+    val seg = s"$dstDir/data/$segName"
+    val n = writeCounted(rows, seg)
+    if (n == 0) { f.delete(path(seg), true); return }
     commitWithRetry(f, dstDir, (mid, md),
       m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
         hw = m.nextId),
-      dedupKey = None, staged = Seq(s"$dstDir/data/$segName"),
+      dedupKey = None, staged = Seq(seg),
       abortOnModelChange = true, verb = "merge")
   }
 
@@ -1188,15 +1324,28 @@ object AnnIndex {
     * includes them). */
   def retrain(corpus: DataFrame, idCol: String, vecCol: String,
               dir: String, centroids: Array[Array[Double]],
-              cbs: Array[Array[Array[Double]]]): Unit = {
+              cbs: Array[Array[Array[Double]]]): Unit =
+    retrainImpl(corpus, idCol, vecCol, dir, IvfPq(centroids, cbs))
+
+  /** [[retrain]] of an SQ8 index onto a re-fitted affine model (and
+    * optionally a new coarse quantizer) — the per-dimension ranges
+    * fitted at build time clip vectors a moved distribution produces.
+    * `retrainSq(corpus')` ≡ `buildSq(corpus')` (q164 gates it). */
+  def retrainSq(corpus: DataFrame, idCol: String, vecCol: String,
+                dir: String, m: Sq.Model,
+                centroids: Option[Array[Array[Double]]] = None): Unit =
+    retrainImpl(corpus, idCol, vecCol, dir, Sq8(m, centroids))
+
+  private def retrainImpl(corpus: DataFrame, idCol: String, vecCol: String,
+                          dir: String, codec: Codec): Unit = {
     val spark = corpus.sparkSession
     val f = fs(spark, dir)
     val (mid, md) = refresh(f, dir)
     maybeKill(dir, "stage")
     val modelDir = freshName("model-")
-    writeModelArtifacts(spark, s"$dir/$modelDir", centroids, cbs)
+    codec.writeModel(spark, s"$dir/$modelDir")
     val segName = freshName("batch-")
-    val n = writeSegment(corpus, idCol, vecCol, dir, segName, centroids, cbs)
+    val n = writeSegment(corpus, idCol, vecCol, dir, segName, codec)
     def cleanup(): Unit = {
       f.delete(path(s"$dir/data/$segName"), true)
       f.delete(path(s"$dir/$modelDir"), true)
@@ -1256,7 +1405,15 @@ object AnnIndex {
                 dir: String, cell: Int,
                 subCentroids: Array[Array[Double]]): Unit =
     splitCellsImpl(corpus, idCol, vecCol, dir, Seq(cell -> subCentroids),
-      expectMid = None, hotOverride = None)
+      expectMid = None, hotOverride = None, kind = IvfPqKind)
+
+  /** [[splitCell]] on a cell-partitioned SQ8 index: a pure RE-KEY, the
+    * codes bit-identical (see [[Sq8]]). */
+  def splitCellSq(corpus: DataFrame, idCol: String, vecCol: String,
+                  dir: String, cell: Int,
+                  subCentroids: Array[Array[Double]]): Unit =
+    splitCellsImpl(corpus, idCol, vecCol, dir, Seq(cell -> subCentroids),
+      expectMid = None, hotOverride = None, kind = Sq8Kind)
 
   /** [[splitCell]] generalized to MANY cells under ONE manifest swap —
     * [[rebalance]]'s batched pass. Hot cells are disjoint (a row sits
@@ -1270,12 +1427,14 @@ object AnnIndex {
     * policy's cached members frame (columns `idCol, vecCol`, exactly
     * the splitting cells' corpus rows) so the pass scans the corpus
     * once, not once per consumer — only valid with `expectMid`, which
-    * guarantees it was derived from THIS snapshot's member set. */
+    * guarantees it was derived from THIS snapshot's member set. `kind`
+    * is the family the caller serves. */
   private[graft] def splitCellsImpl(corpus: DataFrame, idCol: String,
                              vecCol: String, dir: String,
                              splits: Seq[(Int, Array[Array[Double]])],
                              expectMid: Option[Long],
-                             hotOverride: Option[DataFrame]): Unit = {
+                             hotOverride: Option[DataFrame],
+                             kind: String): Unit = {
     val spark = corpus.sparkSession
     val f = fs(spark, dir)
     val (mid, md) = refresh(f, dir)
@@ -1286,15 +1445,17 @@ object AnnIndex {
           "stale; re-run rebalance against the fresh snapshot")
     }
     maybeKill(dir, "stage")
-    val idx = load(spark, dir, asOf = Some(mid))
+    val (_, codec, codes) = openSnapshot(spark, dir, Some(mid), kind)
+    val cents = codec.cells.getOrElse(throw new IllegalArgumentException(
+      "splitting needs a cell-partitioned index (buildSq with centroids)"))
     require(splits.nonEmpty, "no cells to split")
     val cells = splits.map(_._1)
     require(cells.distinct.length == cells.length,
       s"duplicate cells in one split pass: ${cells.mkString(",")}")
-    val dim = idx.centroids.head.length
+    val dim = cents.head.length
     splits.foreach { case (cell, subs) =>
-      require(cell >= 1 && cell <= idx.nlist,
-        s"cell $cell out of range 1..${idx.nlist}")
+      require(cell >= 1 && cell <= cents.length,
+        s"cell $cell out of range 1..${cents.length}")
       require(subs.length >= 2,
         s"a split needs >= 2 sub-centroids, got ${subs.length} (cell $cell)")
       require(subs.forall(_.length == dim),
@@ -1308,8 +1469,8 @@ object AnnIndex {
     // append allows duplicate ids, and the split collapses a
     // duplicated member to its single corpus row (the tombstone masks
     // every old copy; the same id cannot land twice in one segment)
-    val memberIds = idx.codes
-      .filter(col("_cell").isin(cells.map(Int.box): _*))
+    val memberIds = codes
+      .filter(col("cell").isin(cells.map(Int.box): _*))
       .select(col("neighbor_id")).distinct()
     val hot = hotOverride.getOrElse(corpus
       .select(col(idCol), col(vecCol))
@@ -1320,16 +1481,15 @@ object AnnIndex {
     // hottest-first fold: each split replaces its cell's slot with
     // sub-0 and appends the rest — existing cell ids never shift, and
     // the appended ids are pinned by the caller's split order
-    val newCents = splits.foldLeft(idx.centroids) {
+    val grown = codec.withCentroids(splits.foldLeft(cents) {
       case (cs, (cell, subs)) => cs.updated(cell - 1, subs.head) ++ subs.tail
-    }
+    })
     val modelDir = freshName("model-")
-    writeModelArtifacts(spark, s"$dir/$modelDir", newCents, idx.cbs)
+    grown.writeModel(spark, s"$dir/$modelDir")
     val segName = freshName("batch-")
     val tombName = freshName("t-")
-    val n = writeSegment(hot, idCol, vecCol, dir, segName, newCents, idx.cbs)
-    val tn = writeCounted(memberIds, s"$dir/tomb/$tombName",
-      cellPartitioned = false)
+    val n = writeSegment(hot, idCol, vecCol, dir, segName, grown)
+    val tn = writeCounted(memberIds, s"$dir/tomb/$tombName")
     def cleanup(): Unit = {
       f.delete(path(s"$dir/data/$segName"), true)
       f.delete(path(s"$dir/tomb/$tombName"), true)
@@ -1418,21 +1578,10 @@ object AnnIndex {
   def rebalanceReport(corpus: DataFrame, idCol: String, vecCol: String,
                       dir: String, maxImbalance: Double = 4.0,
                       maxSplits: Int = 8): PolicyReport =
-    policyLoop(corpus, idCol, vecCol, maxImbalance, maxSplits,
-      stats = () => {
-        val (mid, _) = refresh(fs(corpus.sparkSession, dir), dir)
-        val idx = load(corpus.sparkSession, dir, asOf = Some(mid))
-        (cellStats(idx).collect()
-          .map(r => (r.getAs[Int]("cell"), r.getAs[Long]("n_vectors"))),
-          idx.nlist, idx.codes, "_cell", mid)
-      },
-      split = (planned, hot, mid) =>
-        splitCellsImpl(corpus, idCol, vecCol, dir, planned,
-          expectMid = Some(mid), hotOverride = Some(hot)))
+    rebalanceImpl(corpus, idCol, vecCol, dir, maxImbalance, maxSplits,
+      IvfPqKind)
 
-  /** [[rebalance]] for the SQ8 tier — same policy, same deterministic
-    * derivation, over [[cellStatsSq]] and [[splitCellSq]]. Requires a
-    * cell-partitioned SQ index (buildSq with centroids). */
+  /** [[rebalance]] of a cell-partitioned SQ8 index. */
   def rebalanceSq(corpus: DataFrame, idCol: String, vecCol: String,
                   dir: String, maxImbalance: Double = 4.0,
                   maxSplits: Int = 8): Int =
@@ -1443,50 +1592,40 @@ object AnnIndex {
   def rebalanceSqReport(corpus: DataFrame, idCol: String, vecCol: String,
                         dir: String, maxImbalance: Double = 4.0,
                         maxSplits: Int = 8): PolicyReport =
-    policyLoop(corpus, idCol, vecCol, maxImbalance, maxSplits,
-      stats = () => {
-        val (mid, _) = refresh(fs(corpus.sparkSession, dir), dir)
-        val idx = loadSq(corpus.sparkSession, dir, asOf = Some(mid))
-        require(idx.centroids.nonEmpty,
-          "rebalanceSq needs a cell-partitioned SQ index (buildSq with " +
-            "centroids)")
-        (cellStatsSq(idx).collect()
-          .map(r => (r.getAs[Int]("cell"), r.getAs[Long]("n_vectors"))),
-          idx.nlist, idx.codes, "cell", mid)
-      },
-      split = (planned, hot, mid) =>
-        splitCellsSqImpl(corpus, idCol, vecCol, dir, planned,
-          expectMid = Some(mid), hotOverride = Some(hot)))
+    rebalanceImpl(corpus, idCol, vecCol, dir, maxImbalance, maxSplits,
+      Sq8Kind)
 
-  /** The tier-shared policy loop (see [[rebalance]]'s doc): `stats`
-    * re-reads (per-cell counts, nlist, the codes frame, its cell
-    * column, the snapshot generation) from the CURRENT snapshot each
-    * pass — every split grows nlist, which tightens the bar. Each pass
-    * materializes ONE members frame covering all of the pass's hot
-    * cells (id, raw vector, normalized vector, owning cell) and caches
-    * it for the pass's lifetime: seed A / seed B / the assignment sums
-    * of every hot cell AND the split re-encode read the cache instead
-    * of re-scanning the corpus (~3 scans per cell + 1 per split
-    * before; 1 per pass now — the fix that matters at 100 TB, where a
-    * corpus scan is the whole cost). Unpersisted per pass, like
+  /** The policy loop of [[rebalance]]'s doc. Each pass re-reads the
+    * CURRENT snapshot's per-cell counts (every split grows nlist, which
+    * tightens the bar) and materializes ONE members frame covering all
+    * of the pass's hot cells (id, raw vector, normalized vector, owning
+    * cell), cached for the pass's lifetime: seed A / seed B / the
+    * assignment sums of every hot cell AND the split re-encode read the
+    * cache instead of re-scanning the corpus (~3 scans per cell + 1 per
+    * split before; 1 per pass now — the fix that matters at 100 TB,
+    * where a corpus scan is the whole cost). Unpersisted per pass, like
     * Components' round frames. */
-  private def policyLoop(corpus: DataFrame, idCol: String, vecCol: String,
-                         maxImbalance: Double, maxSplits: Int,
-                         stats: () => (Array[(Int, Long)], Int, DataFrame,
-                           String, Long),
-                         split: (Seq[(Int, Array[Array[Double]])],
-                           DataFrame, Long) => Unit): PolicyReport = {
+  private def rebalanceImpl(corpus: DataFrame, idCol: String, vecCol: String,
+                            dir: String, maxImbalance: Double,
+                            maxSplits: Int, kind: String): PolicyReport = {
     require(maxImbalance > 1.0,
       s"maxImbalance must exceed 1 (the balanced share), got $maxImbalance")
     require(maxSplits >= 1, s"maxSplits must be >= 1, got $maxSplits")
     import graft.functions.{VectorFunctions => VF}
+    val spark = corpus.sparkSession
     var splits = 0
     var passes = 0
     val cellsSplit = scala.collection.mutable.ArrayBuffer[Int]()
     val unsplittable = scala.collection.mutable.Set[Int]()
     var done = false
     while (!done && splits < maxSplits) {
-      val (counts, nlist, codes, cellCol, mid) = stats()
+      val (mid, _) = refresh(fs(spark, dir), dir)
+      val (_, codec, codes) = openSnapshot(spark, dir, Some(mid), kind)
+      val nlist = codec.cells.getOrElse(throw new IllegalArgumentException(
+        "rebalance needs a cell-partitioned index (buildSq with centroids)"))
+        .length
+      val counts = cellStatsImpl(codes, "cell").collect()
+        .map(r => (r.getAs[Int]("cell"), r.getAs[Long]("n_vectors")))
       val total = counts.map(_._2).sum
       val bar = maxImbalance * total.toDouble / nlist
       val hotCells = counts
@@ -1498,9 +1637,9 @@ object AnnIndex {
       else {
         passes += 1
         val memberIds = codes
-          .filter(col(cellCol).isin(hotCells.map(Int.box): _*))
+          .filter(col("cell").isin(hotCells.map(Int.box): _*))
           .select(col("neighbor_id").as("_rid"),
-            col(cellCol).cast("int").as("_mcell"))
+            col("cell").cast("int").as("_mcell"))
           .distinct()
         val members = corpus
           .select(col(idCol), col(vecCol),
@@ -1528,7 +1667,8 @@ object AnnIndex {
                 .isin(planned.map(t => Int.box(t._1)): _*))
               .dropDuplicates("_rid")
               .select(col(idCol), col(vecCol))
-            split(planned.toSeq, hot, mid)
+            splitCellsImpl(corpus, idCol, vecCol, dir, planned.toSeq,
+              expectMid = Some(mid), hotOverride = Some(hot), kind = kind)
             splits += planned.size
             cellsSplit ++= planned.map(_._1)
           }
@@ -1595,7 +1735,7 @@ object AnnIndex {
     if (java.util.Arrays.equals(cA, cB)) None else Some(Array(cA, cB))
   }
 
-  // ------------------------------------------------------------- SQ8
+  // ---- SQ8 read side ------------------------------------------------
 
   /** An opened SQ8 snapshot: the 2×dim affine model + the lazy segment
     * union (`neighbor_id, codes, recon_norm` — [[Sq.encode]]'s schema,
@@ -1604,111 +1744,12 @@ object AnnIndex {
     * scans (the cheap tier's trade); a CELL-PARTITIONED SQ index keeps
     * the same full-scan default while also serving [[topKSq]]'s pruned
     * mode — one layout, both read paths. */
-  final case class LoadedSq(model: graft.operators.Sq.Model,
+  final case class LoadedSq(model: Sq.Model,
                             centroids: Option[Array[Array[Double]]],
                             codes: DataFrame, nrows: Long,
                             batches: Seq[Long]) {
     def dim: Int = model.dim
     def nlist: Int = centroids.map(_.length).getOrElse(0)
-  }
-
-  /** Land one SQ segment. With a coarse quantizer the encoded rows gain
-    * a `cell` column (nearest centroid of the RAW vector — the same
-    * assignment the IVF-PQ tier makes) and the segment is PARTITIONED
-    * BY it, exactly like [[writeSegment]] — so the probe filter can
-    * become a parquet PartitionFilter in pruned reads. */
-  private def writeSqSegment(delta: DataFrame, idCol: String,
-                             vecCol: String, dir: String, segName: String,
-                             m: graft.operators.Sq.Model,
-                             centroids: Option[Array[Array[Double]]]): Long = {
-    import graft.operators.Sq
-    val seg = s"$dir/data/$segName"
-    val spread = graft.operators.Spread.toCores(delta)
-    centroids match {
-      case None =>
-        writeCounted(Sq.encode(spread, idCol, vecCol, m), seg,
-          cellPartitioned = false)
-      case Some(cents) =>
-        import graft.plans.SketchExpressions.nearestCentroids
-        val e = spread.select(col(idCol).as("neighbor_id"),
-            Sq.encodeExpr(col(vecCol), m).as("codes"),
-            element_at(nearestCentroids(col(vecCol), cents, 1), 1).as("cell"))
-          .withColumn("recon_norm", Sq.reconNormExpr(col("codes"), m))
-        writeCounted(e.repartition(col("cell")), seg, cellPartitioned = true)
-    }
-  }
-
-  /** Build and atomically publish a fresh SQ8 index at `dir` — same
-    * staging/manifest protocol as [[buildIvfPq]], with the
-    * parameter-sized model persisted as (i, mn, step, inv) rows.
-    * Passing `centroids` (typically the IVF tier's coarse quantizer)
-    * produces the CELL-PARTITIONED layout: segments carry a `cell`
-    * partition column, the centroids persist beside the model, and
-    * [[topKSq]] gains the probe-pruned read path — while the default
-    * full scan stays hash-identical to the flat layout (q155's gate). */
-  /** Land the parameter-sized SQ model tables (affine model, meta,
-    * optional coarse centroids) under `root` — the build writes them
-    * at the index root (model version 0), [[retrainSq]] under a fresh
-    * `model-<uniq>/` directory. */
-  private def writeSqModelArtifacts(spark: SparkSession, root: String,
-                                    m: graft.operators.Sq.Model,
-                                    centroids: Option[Array[Array[Double]]]): Unit = {
-    import spark.implicits._
-    (0 until m.dim).map(i => (i, m.mins(i), m.steps(i), m.invSteps(i)))
-      .toDF("i", "mn", "step", "inv")
-      .repartition(1).write.mode("overwrite").parquet(s"$root/model")
-    Seq((m.dim, "sq8")).toDF("dim", "kind")
-      .repartition(1).write.mode("overwrite").parquet(s"$root/meta")
-    centroids.foreach { cents =>
-      cents.zipWithIndex.map { case (v, i) => (i + 1, v.toSeq) }.toSeq
-        .toDF("cell", "vec")
-        .repartition(1).write.mode("overwrite").parquet(s"$root/centroids")
-    }
-  }
-
-  def buildSq(corpus: DataFrame, idCol: String, vecCol: String,
-              dir: String, m: graft.operators.Sq.Model,
-              centroids: Option[Array[Array[Double]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    val f = fs(spark, dir)
-    val target = path(dir)
-    val parent = Option(target.getParent).getOrElse(path("."))
-    f.mkdirs(parent)
-    val tmp = path(parent.toString + s"/_tmp.${target.getName}")
-    f.delete(tmp, true)
-
-    writeSqModelArtifacts(spark, tmp.toString, m, centroids)
-    val segName = freshName("batch-")
-    val n = writeSqSegment(corpus, idCol, vecCol, tmp.toString, segName, m,
-      centroids)
-    writeManifest(f, tmp.toString, 0L,
-      ManifestData(Seq(Art(0L, n, segName)), Seq.empty, hw = 0L, shw = -1L))
-
-    f.delete(target, true)
-    if (!f.rename(tmp, target))
-      throw new java.io.IOException(s"rename $tmp -> $target failed")
-  }
-
-  /** Append a new immutable SQ8 segment — model (and coarse quantizer,
-    * when present) read FROM the index, same high-water allocation,
-    * idempotent `dedupKey` contract and empty-delta short-circuit as
-    * [[appendIvfPq]]. */
-  def appendSq(delta: DataFrame, idCol: String, vecCol: String,
-               dir: String, dedupKey: Option[Long] = None): Unit = {
-    val spark = delta.sparkSession
-    val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
-    maybeKill(dir, "stage")
-    val (model, cents) = readSqModel(spark, dir, md)
-    val segName = freshName("batch-")
-    val n = writeSqSegment(delta, idCol, vecCol, dir, segName, model, cents)
-    if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
-    commitWithRetry(f, dir, (mid, md),
-      m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
-        hw = m.nextId, shw = math.max(m.shw, dedupKey.getOrElse(m.shw))),
-      dedupKey, Seq(s"$dir/data/$segName"),
-      abortOnModelChange = true, verb = "append")
   }
 
   /** Open an SQ8 snapshot (model validated against meta; coarse
@@ -1717,170 +1758,13 @@ object AnnIndex {
     * [[load]]'s does — the manifest machinery is shared across both
     * index families, so retention ([[expire]]`(keepLast)`) and pinned
     * reads behave identically on the cheap tier. */
-  /** [[streamAppend]]'s cheap-tier twin: continuous SQ8 index
-    * ingestion, one idempotent [[appendSq]] segment per micro-batch
-    * with the foreachBatch id as the dedup key — the same at-least-once
-    * replay and compaction-survival contract. */
-  def streamAppendSq(updates: DataFrame, idCol: String, vecCol: String,
-                     dir: String, checkpoint: String,
-                     trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        appendSq(batch.toDF(), idCol, vecCol, dir, dedupKey = Some(id))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  /** [[upsertBatchIvfPq]]'s cheap-tier twin: one streamed-CORRECTION
-    * batch on an SQ8 index — the batch's ids are tombstoned at id `t`
-    * (masking every older segment's copy) and the re-encoded batch
-    * lands as segment `t+1`, both published by one atomic manifest
-    * swap. Same `dedupKey` replay contract, empty-batch short-circuit,
-    * re-base on lost races, and loud abort under a concurrent
-    * [[retrainSq]]. */
-  def upsertBatchSq(batch: DataFrame, idCol: String, vecCol: String,
-                    dir: String, dedupKey: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    if (dedupKey.exists(_ <= md.shw)) return // committed duplicate delivery
-    maybeKill(dir, "stage")
-    val (model, cents) = readSqModel(spark, dir, md)
-    val segName = freshName("batch-")
-    val tombName = freshName("t-")
-    val n = writeSqSegment(batch, idCol, vecCol, dir, segName, model, cents)
-    if (n == 0) { f.delete(path(s"$dir/data/$segName"), true); return }
-    val tn = writeCounted(
-      batch.select(col(idCol).cast("long").as("neighbor_id")).distinct(),
-      s"$dir/tomb/$tombName", cellPartitioned = false)
-    commitWithRetry(f, dir, (mid, md),
-      m => m.copy(segs = m.segs :+ Art(m.nextId + 1, n, segName),
-        tombs = m.tombs :+ Art(m.nextId, tn, tombName),
-        hw = m.nextId + 1,
-        shw = math.max(m.shw, dedupKey.getOrElse(m.shw))),
-      dedupKey, Seq(s"$dir/data/$segName", s"$dir/tomb/$tombName"),
-      abortOnModelChange = true, verb = "upsert")
-  }
-
-  /** [[streamUpsert]]'s cheap-tier twin: continuous CORRECTION ingest
-    * into an SQ8 index, [[upsertBatchSq]] per micro-batch with the
-    * foreachBatch id as the dedup key. */
-  def streamUpsertSq(updates: DataFrame, idCol: String, vecCol: String,
-                     dir: String, checkpoint: String,
-                     trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        upsertBatchSq(batch.toDF(), idCol, vecCol, dir, dedupKey = Some(id))
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
-  /** [[merge]]'s cheap-tier twin: land `src`'s visible SQ rows
-    * (tombstones applied) as one new segment of `dst` without
-    * re-encoding — the shard-federation verb over the SQ8 tier. Both
-    * indexes must carry bit-equal affine models (and, when
-    * cell-partitioned, bit-equal coarse quantizers); the copied
-    * segment keeps the destination's layout because the rows already
-    * carry their `cell` column when one exists. Same optimistic-
-    * concurrency publish and concurrent-retrain abort as [[merge]]. */
-  def mergeSq(spark: SparkSession, dstDir: String, srcDir: String): Unit = {
-    require(dstDir != srcDir, "cannot merge an index into itself")
-    val f = fs(spark, dstDir)
-    val (mid, md) = refresh(f, dstDir)
-    maybeKill(dstDir, "stage")
-    val (dstModel, dstCents) = readSqModel(spark, dstDir, md)
-    val src = loadSq(spark, srcDir)
-    require(dstModel.mins.toSeq == src.model.mins.toSeq &&
-        dstModel.steps.toSeq == src.model.steps.toSeq &&
-        dstCents.map(_.map(_.toSeq).toSeq) ==
-          src.centroids.map(_.map(_.toSeq).toSeq),
-      s"model mismatch: $srcDir was not built with $dstDir's affine " +
-        "model/quantizer — codes are not comparable across models")
-    val segName = freshName("batch-")
-    val seg = s"$dstDir/data/$segName"
-    val n =
-      if (src.codes.columns.contains("cell"))
-        writeCounted(src.codes.repartition(col("cell")), seg,
-          cellPartitioned = true)
-      else writeCounted(src.codes, seg, cellPartitioned = false)
-    if (n == 0) { f.delete(path(seg), true); return }
-    commitWithRetry(f, dstDir, (mid, md),
-      m => m.copy(segs = m.segs :+ Art(m.nextId, n, segName),
-        hw = m.nextId),
-      dedupKey = None, staged = Seq(seg),
-      abortOnModelChange = true, verb = "merge")
-  }
-
-  /** [[retrain]]'s cheap-tier twin: re-fit the affine model (and
-    * optionally the coarse quantizer) on the current corpus and
-    * re-encode it as the next generation of the SAME manifest chain.
-    * Identical contract: `retrainSq(corpus')` ≡ `buildSq(corpus')`
-    * (q164 gates it), pinned pre-retrain readers keep the old model
-    * through the manifest's model pointer, post-retrain appends
-    * resolve the new one, and a concurrent [[appendSq]] aborts loudly
-    * on the model-version change. An SQ model drifts exactly like an
-    * IVF one — the per-dimension min/max ranges fitted at build time
-    * clip vectors a moved distribution produces. */
-  def retrainSq(corpus: DataFrame, idCol: String, vecCol: String,
-                dir: String, m: graft.operators.Sq.Model,
-                centroids: Option[Array[Array[Double]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    maybeKill(dir, "stage")
-    val modelDir = freshName("model-")
-    writeSqModelArtifacts(spark, s"$dir/$modelDir", m, centroids)
-    val segName = freshName("batch-")
-    val n = writeSqSegment(corpus, idCol, vecCol, dir, segName, m, centroids)
-    def cleanup(): Unit = {
-      f.delete(path(s"$dir/data/$segName"), true)
-      f.delete(path(s"$dir/$modelDir"), true)
-    }
-    if (n == 0) {
-      cleanup()
-      throw new IllegalArgumentException(
-        s"refusing to retrain $dir onto an empty corpus")
-    }
-    // like [[retrain]]: a lost race means someone committed rows this
-    // retrain's corpus may not include — abort loudly, never erase
-    maybeKill(dir, "staged")
-    fireTestHook(dir)
-    if (!tryPublish(f, dir, mid + 1, ManifestData(
-        Seq(Art(md.nextId, n, segName)), Seq.empty,
-        hw = md.nextId, shw = md.shw,
-        model = md.model + 1, modelDir = modelDir))) {
-      cleanup()
-      throw new java.util.ConcurrentModificationException(
-        s"another writer committed to $dir during the retrain — its rows " +
-          "are not in this retrain's corpus and must not be erased; " +
-          "re-run retrain against a corpus that includes them")
-    }
-    maybeKill(dir, "published")
-  }
-
   def loadSq(spark: SparkSession, dir: String,
              asOf: Option[Long] = None): LoadedSq = {
-    val f = fs(spark, dir)
-    val (mid, md) = resolveReadManifest(f, dir, asOf)
-    // model artifacts resolve THROUGH the pinned manifest (see [[load]])
-    val (m, cents) = readSqModel(spark, dir, md)
-    LoadedSq(m, cents, visibleUnion(spark, dir, md), md.segs.map(_.n).sum,
-      md.segs.map(_.id))
+    val (md, codec, codes) = openSnapshot(spark, dir, asOf, Sq8Kind)
+    val Sq8(m, cents) = codec
+    LoadedSq(m, cents, codes, md.segs.map(_.n).sum, md.segs.map(_.id))
   }
 
-  /** Query an opened SQ8 snapshot — [[Sq.topK]]'s factored-dot scan
-    * over the pinned segment union. The DEFAULT is the full codes scan
-    * (the cheap tier's exact-over-compressed contract — hash-identical
-    * whether the layout is flat or cell-partitioned). `prune = true` on
-    * a cell-built index restricts candidates to the queries' nprobe
-    * nearest coarse cells, pushed into every segment scan as a parquet
-    * PartitionFilter (the IVF trade: nprobe/nlist of the scan I/O for
-    * approximate recall — [[topK]]'s plan with SQ scoring). Pruning a
-    * flat index fails loudly rather than silently full-scanning. */
   /** Serving-batch snapshot cap: a pruned search runs the queries plan
     * twice (probe-cell collect, then the scoring join), so the batch
     * is SNAPSHOTTED first. Up to this many rows it becomes a driver
@@ -1955,133 +1839,21 @@ object AnnIndex {
     }
   }
 
-  /** [[cellStats]] for the SQ8 tier's cell-partitioned layout — the
-    * same per-cell balance audit over the `cell` partition column. */
-  def cellStatsSq(idx: LoadedSq): DataFrame = {
-    require(idx.centroids.nonEmpty,
-      "cellStatsSq needs a cell-partitioned SQ index (buildSq with centroids)")
-    // pinned (≤ nlist rows): the share projection AND the 1-row total
-    // consume it — without the cut each re-scanned the visible codes
-    val counts = graft.operators.Pin.param(idx.codes.groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_vectors")))
-    val total = counts.agg(sum(col("n_vectors")).as("_t"))
-    counts.crossJoin(broadcast(total))
-      .select(col("cell").cast("int").as("cell"),
-        col("n_vectors"),
-        bround(col("n_vectors") / col("_t"), 6).as("frac"))
-  }
-
-  /** [[splitCell]] for the SQ8 tier — same semantics (index membership
-    * authoritative, centroid ids never shift, one manifest swap of
-    * tombstone + re-keyed segment + bumped model) with one structural
-    * simplification the cheap tier earns: SQ codes are a per-dimension
-    * affine of the RAW vector, independent of the cell, so the
-    * "re-encode" reproduces bit-identical codes — the split only moves
-    * rows to new partition keys under the grown centroid table. The
-    * corpus is still required: the index stores codes, and the NEW
-    * assignment needs the raw vectors. */
-  def splitCellSq(corpus: DataFrame, idCol: String, vecCol: String,
-                  dir: String, cell: Int,
-                  subCentroids: Array[Array[Double]]): Unit =
-    splitCellsSqImpl(corpus, idCol, vecCol, dir, Seq(cell -> subCentroids),
-      expectMid = None, hotOverride = None)
-
-  /** [[splitCellsImpl]] for the SQ8 tier — the same batched,
-    * snapshot-pinned, one-swap split over [[cellStatsSq]]'s layout
-    * (see the IVF twin's doc for `expectMid` / `hotOverride`). */
-  private[graft] def splitCellsSqImpl(corpus: DataFrame, idCol: String,
-                               vecCol: String, dir: String,
-                               splits: Seq[(Int, Array[Array[Double]])],
-                               expectMid: Option[Long],
-                               hotOverride: Option[DataFrame]): Unit = {
-    val spark = corpus.sparkSession
-    val f = fs(spark, dir)
-    val (mid, md) = refresh(f, dir)
-    expectMid.foreach { e =>
-      if (mid != e) throw new java.util.ConcurrentModificationException(
-        s"another writer committed to $dir after the policy derived its " +
-          s"sub-centroids (snapshot $e -> $mid) — the derivation is " +
-          "stale; re-run rebalanceSq against the fresh snapshot")
-    }
-    maybeKill(dir, "stage")
-    val idx = loadSq(spark, dir, asOf = Some(mid))
-    val cents = idx.centroids.getOrElse(throw new IllegalArgumentException(
-      "splitCellSq needs a cell-partitioned SQ index (buildSq with " +
-        "centroids)"))
-    require(splits.nonEmpty, "no cells to split")
-    val cells = splits.map(_._1)
-    require(cells.distinct.length == cells.length,
-      s"duplicate cells in one split pass: ${cells.mkString(",")}")
-    val dim = idx.dim
-    splits.foreach { case (cell, subs) =>
-      require(cell >= 1 && cell <= cents.length,
-        s"cell $cell out of range 1..${cents.length}")
-      require(subs.length >= 2,
-        s"a split needs >= 2 sub-centroids, got ${subs.length} (cell $cell)")
-      require(subs.forall(_.length == dim),
-        s"sub-centroid dim != index dim $dim (cell $cell)")
-    }
-    val cellsMsg = cells.mkString(",")
-    val memberIds = idx.codes
-      .filter(col("cell").isin(cells.map(Int.box): _*))
-      .select(col("neighbor_id")).distinct()
-    val hot = hotOverride.getOrElse(corpus
-      .select(col(idCol), col(vecCol))
-      .join(memberIds.withColumnRenamed("neighbor_id", "_split_mid"),
-        col(idCol).cast("long") === col("_split_mid"))
-      .drop("_split_mid"))
-    val newCents = splits.foldLeft(cents) {
-      case (cs, (cell, subs)) => cs.updated(cell - 1, subs.head) ++ subs.tail
-    }
-    val modelDir = freshName("model-")
-    writeSqModelArtifacts(spark, s"$dir/$modelDir", idx.model, Some(newCents))
-    val segName = freshName("batch-")
-    val tombName = freshName("t-")
-    val n = writeSqSegment(hot, idCol, vecCol, dir, segName, idx.model,
-      Some(newCents))
-    val tn = writeCounted(memberIds, s"$dir/tomb/$tombName",
-      cellPartitioned = false)
-    def cleanup(): Unit = {
-      f.delete(path(s"$dir/data/$segName"), true)
-      f.delete(path(s"$dir/tomb/$tombName"), true)
-      f.delete(path(s"$dir/$modelDir"), true)
-    }
-    if (tn == 0) {
-      cleanup()
-      throw new IllegalArgumentException(
-        s"cell(s) $cellsMsg of $dir are empty — nothing to split (re-read " +
-          "cellStatsSq; the imbalance may have been compacted away)")
-    }
-    if (n != tn) {
-      cleanup()
-      throw new IllegalArgumentException(
-        s"corpus does not cover cell(s) $cellsMsg exactly: the index " +
-          s"holds $tn rows, the re-key landed $n — a member id is " +
-          "missing from (or duplicated in) the corpus; splitting would " +
-          "drop or duplicate those rows")
-    }
-    maybeKill(dir, "staged")
-    fireTestHook(dir)
-    if (!tryPublish(f, dir, mid + 1, md.copy(
-        segs = md.segs :+ Art(md.nextId + 1, n, segName),
-        tombs = md.tombs :+ Art(md.nextId, tn, tombName),
-        hw = md.nextId + 1,
-        model = md.model + 1, modelDir = modelDir))) {
-      cleanup()
-      throw new java.util.ConcurrentModificationException(
-        s"another writer committed to $dir during the split — its rows " +
-          "may sit in the cell being split and would be stranded under a " +
-          "retired centroid; re-run splitCellSq against the fresh snapshot")
-    }
-    maybeKill(dir, "published")
-  }
-
+  /** Query an opened SQ8 snapshot — [[Sq.topK]]'s factored-dot scan
+    * over the pinned segment union. The DEFAULT is the full codes scan
+    * (the cheap tier's exact-over-compressed contract — hash-identical
+    * whether the layout is flat or cell-partitioned). `prune = true` on
+    * a cell-built index restricts candidates to the queries' nprobe
+    * nearest coarse cells, pushed into every segment scan as a parquet
+    * PartitionFilter (the IVF trade: nprobe/nlist of the scan I/O for
+    * approximate recall — [[topK]]'s plan with SQ scoring). Pruning a
+    * flat index fails loudly rather than silently full-scanning. */
   def topKSq(idx: LoadedSq, queries: DataFrame, idCol: String,
              vecCol: String, k: Int = 10, nprobe: Int = 4,
              prune: Boolean = false): DataFrame = {
     import graft.plans.SketchExpressions.nearestCentroids
     if (!prune)
-      graft.operators.Sq.topK(queries, idx.codes, idCol, vecCol, idx.model, k)
+      Sq.topK(queries, idx.codes, idCol, vecCol, idx.model, k)
     else {
       val cents = idx.centroids.getOrElse(throw new IllegalArgumentException(
         "prune=true needs a cell-partitioned SQ index (buildSq with centroids)"))
@@ -2093,7 +1865,7 @@ object AnnIndex {
       val codes =
         if (probed.length >= cents.length) idx.codes
         else idx.codes.filter(col("cell").isin(probed.map(Int.box): _*))
-      graft.operators.Sq.topK(q, codes, idCol, vecCol, idx.model, k)
+      Sq.topK(q, codes, idCol, vecCol, idx.model, k)
     }
   }
 
@@ -2226,15 +1998,11 @@ object AnnIndex {
     * `VERSION AS OF` read); default is the current (highest) manifest.
     * Fails loudly on an expired or unknown id. */
   def load(spark: SparkSession, dir: String, asOf: Option[Long] = None): Loaded = {
-    val f = fs(spark, dir)
-    val (mid, md) = resolveReadManifest(f, dir, asOf)
-    // model artifacts resolve THROUGH the pinned manifest: a reader
-    // pinned before a [[retrain]] keeps scoring with the model its
-    // segments were encoded with (version 0 = the build's root dirs)
-    val (cents, cbs) = readIvfModel(spark, dir, md)
-    val codes = visibleUnion(spark, dir, md)
-      .select(col("neighbor_id"), col("cell").as("_cell"), col("codes"))
-    Loaded(cents, cbs, codes, md.segs.map(_.n).sum, md.segs.map(_.id))
+    val (md, codec, codes) = openSnapshot(spark, dir, asOf, IvfPqKind)
+    val IvfPq(cents, cbs) = codec
+    Loaded(cents, cbs,
+      codes.select(col("neighbor_id"), col("cell").as("_cell"), col("codes")),
+      md.segs.map(_.n).sum, md.segs.map(_.id))
   }
 
   /** Recover a chain WEDGED by a publisher that died mid-write: a
@@ -2435,6 +2203,20 @@ object AnnIndex {
       .sorted
   }
 
+  /** The distinct allowed-id mask, re-planted as a broadcast LITERAL
+    * when it fits under `smallMask` rows (the tiny-allowlist hatch
+    * shared by [[topKWhere]] and [[topKWhereSq]]). */
+  private def allowedMask(spark: SparkSession, allowed: DataFrame,
+                          allowedIdCol: String, smallMask: Int): DataFrame = {
+    val mask = allowed.select(col(allowedIdCol).cast("long")
+      .as("neighbor_id")).distinct()
+    val small = mask.limit(smallMask + 1).collect()
+    if (small.length <= smallMask)
+      broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(small: _*), mask.schema))
+    else mask
+  }
+
   /** FILTERED search — the metadata-predicate vector query every
     * production deployment serves ("nearest neighbors WHERE lang='en'"):
     * the allowed-id set is semi-joined into the codes scan BEFORE
@@ -2459,20 +2241,6 @@ object AnnIndex {
     * which is what keeps one oracle valid for both; q161 gates the
     * literal-mask plan, AnnIndexSpec asserts the probe PartitionFilter
     * survives it. */
-  /** The distinct allowed-id mask, re-planted as a broadcast LITERAL
-    * when it fits under `smallMask` rows (the tiny-allowlist hatch
-    * shared by [[topKWhere]] and [[topKWhereSq]]). */
-  private def allowedMask(spark: SparkSession, allowed: DataFrame,
-                          allowedIdCol: String, smallMask: Int): DataFrame = {
-    val mask = allowed.select(col(allowedIdCol).cast("long")
-      .as("neighbor_id")).distinct()
-    val small = mask.limit(smallMask + 1).collect()
-    if (small.length <= smallMask)
-      broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(small: _*), mask.schema))
-    else mask
-  }
-
   def topKWhere(idx: Loaded, queries: DataFrame, idCol: String,
                 vecCol: String, allowed: DataFrame, allowedIdCol: String,
                 k: Int = 10, nprobe: Int = 4,
@@ -2484,11 +2252,10 @@ object AnnIndex {
       queries, idCol, vecCol, k, nprobe, prune)
   }
 
-  /** [[topKWhere]]'s cheap-tier twin: filtered search over an SQ8
-    * snapshot with the same PRE-FILTER semantics (the allowed-id set is
-    * semi-joined into the codes scan BEFORE ranking, so each query
-    * still returns up to k ALLOWED neighbors) and the same
-    * tiny-allowlist literal hatch. The SQ model is fitted on the WHOLE
+  /** [[topKWhere]] over an SQ8 snapshot: the same PRE-FILTER semantics
+    * (the allowed-id set is semi-joined into the codes scan BEFORE
+    * ranking, so each query still returns up to k ALLOWED neighbors)
+    * and the same tiny-allowlist literal hatch. The SQ model is fitted on the WHOLE
     * corpus at build time, so mask-at-read scores each allowed row
     * exactly as the unfiltered scan would — the restriction changes
     * which rows are ranked, never how (q163 hash-gates it). Works on
@@ -2510,14 +2277,23 @@ object AnnIndex {
     * hazard: every query probing it scans 100× the codes; Faiss's
     * imbalance_factor). One nlist-bounded hash agg over the codes scan
     * plus a broadcast 1-row total — no sort, no collect. */
-  def cellStats(idx: Loaded): DataFrame = {
+  def cellStats(idx: Loaded): DataFrame = cellStatsImpl(idx.codes, "_cell")
+
+  /** [[cellStats]] for a cell-partitioned SQ8 index. */
+  def cellStatsSq(idx: LoadedSq): DataFrame = {
+    require(idx.centroids.nonEmpty,
+      "cellStatsSq needs a cell-partitioned SQ index (buildSq with centroids)")
+    cellStatsImpl(idx.codes, "cell")
+  }
+
+  private def cellStatsImpl(codes: DataFrame, cellCol: String): DataFrame = {
     // pinned (≤ nlist rows): the share projection AND the 1-row total
     // consume it — without the cut each re-scanned the visible codes
-    val counts = graft.operators.Pin.param(idx.codes.groupBy(col("_cell"))
+    val counts = graft.operators.Pin.param(codes.groupBy(col(cellCol))
       .agg(count(lit(1)).as("n_vectors")))
     val total = counts.agg(sum(col("n_vectors")).as("_t"))
     counts.crossJoin(broadcast(total))
-      .select(col("_cell").cast("int").as("cell"),
+      .select(col(cellCol).cast("int").as("cell"),
         col("n_vectors"),
         bround(col("n_vectors") / col("_t"), 6).as("frac"))
   }

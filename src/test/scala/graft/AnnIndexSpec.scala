@@ -1065,4 +1065,110 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(AnnIndex.load(spark, dir2).nlist == cents.length + 1)
     assert(AnnIndex.load(spark, dir2).codes.count() == 41)
   }
+
+  /** One index family's writer verbs, as the lifecycle table drives them. */
+  private final case class Family(
+      name: String,
+      build: (org.apache.spark.sql.DataFrame, String) => Unit,
+      append: (org.apache.spark.sql.DataFrame, String) => Unit,
+      upsert: (org.apache.spark.sql.DataFrame, String) => Unit,
+      merge: (String, String) => Unit,
+      hotCell: String => Int,
+      split: (String, Int, Array[Array[Double]]) => Unit,
+      retrain: String => Unit)
+
+  /** Every artifact the top manifest lists: its `describe` n_rows, its
+    * manifest line's count and a read-back count of its directory agree. */
+  private def assertCountsMatch(dir: String, after: String): Unit = {
+    val top = AnnIndex.versionsOf(spark, dir).last
+    val described = AnnIndex.describe(spark, dir)
+      .filter(col("generation") === top)
+      .select("kind", "artifact_id", "n_rows").as[(String, Long, Long)]
+      .collect().map { case (k, id, n) => (k, id) -> n }.toMap
+    val src = scala.io.Source.fromFile(s"$dir/manifest/m-$top")
+    val listed =
+      try src.getLines().map(_.trim.split("\\s+")).collect {
+        case Array(k, n, d) if k.startsWith("batch-") =>
+          ("segment", k.drop(6).toLong) -> (n.toLong, s"$dir/data/$d")
+        case Array(k, n, d) if k.startsWith("tomb-") =>
+          ("tombstone", k.drop(5).toLong) -> (n.toLong, s"$dir/tomb/$d")
+      }.toMap
+      finally src.close()
+    assert(described.keySet == listed.keySet,
+      s"after $after: describe and the manifest list different artifacts")
+    listed.foreach { case (key, (n, artifact)) =>
+      val readBack = spark.read.parquet(artifact).count()
+      assert(described(key) == n && n == readBack,
+        s"after $after: $key lists ${described(key)} rows, read back $readBack")
+    }
+  }
+
+  test("both codecs through the lifecycle: manifest row counts equal read-back counts; the other family's verbs fail loudly") {
+    import graft.operators.Sq
+    val e = corpus(70).cache()
+    val (cents, cbs) = model(e)
+    val sqModel = Sq.fit(e, "embedding")
+    def hottest(stats: org.apache.spark.sql.DataFrame): Int =
+      stats.collect().maxBy(r => (r.getAs[Long]("n_vectors"),
+        -r.getAs[Int]("cell"))).getAs[Int]("cell")
+    val families = Seq(
+      Family("IVF-PQ",
+        (df, d) => AnnIndex.buildIvfPq(df, "vec_id", "embedding", d, cents, cbs),
+        (df, d) => AnnIndex.appendIvfPq(df, "vec_id", "embedding", d),
+        (df, d) => AnnIndex.upsertBatchIvfPq(df, "vec_id", "embedding", d),
+        (dst, src) => AnnIndex.merge(spark, dst, src),
+        d => hottest(AnnIndex.cellStats(AnnIndex.load(spark, d))),
+        (d, cell, subs) =>
+          AnnIndex.splitCell(e, "vec_id", "embedding", d, cell, subs),
+        d => AnnIndex.retrain(e, "vec_id", "embedding", d, cents, cbs)),
+      Family("SQ8",
+        (df, d) => AnnIndex.buildSq(df, "vec_id", "embedding", d, sqModel,
+          Some(cents)),
+        (df, d) => AnnIndex.appendSq(df, "vec_id", "embedding", d),
+        (df, d) => AnnIndex.upsertBatchSq(df, "vec_id", "embedding", d),
+        (dst, src) => AnnIndex.mergeSq(spark, dst, src),
+        d => hottest(AnnIndex.cellStatsSq(AnnIndex.loadSq(spark, d))),
+        (d, cell, subs) =>
+          AnnIndex.splitCellSq(e, "vec_id", "embedding", d, cell, subs),
+        d => AnnIndex.retrainSq(e, "vec_id", "embedding", d, sqModel,
+          Some(cents))))
+    val root = tmpDir()
+    def ids(lo: Long, hi: Long) =
+      e.filter(col("vec_id") >= lo && col("vec_id") < hi)
+    families.foreach { fam =>
+      val dir = s"$root/${fam.name}/idx"
+      val shard = s"$root/${fam.name}/shard"
+      def step(verb: String)(run: => Unit): Unit = {
+        run
+        assertCountsMatch(dir, s"${fam.name} $verb")
+      }
+      step("build")(fam.build(ids(0, 40), dir))
+      step("append")(fam.append(ids(40, 60), dir))
+      step("upsert")(fam.upsert(ids(0, 5), dir))
+      step("delete")(AnnIndex.delete(ids(10, 15), "vec_id", dir))
+      step("merge") {
+        fam.build(ids(60, 70), shard)
+        fam.merge(dir, shard)
+      }
+      step("splitCell") {
+        val cell = fam.hotCell(dir)
+        val c = cents(cell - 1)
+        fam.split(dir, cell,
+          Array(c.updated(0, c(0) + 0.1), c.updated(0, c(0) - 0.1)))
+      }
+      step("compact")(AnnIndex.compact(spark, dir))
+      step("retrain")(fam.retrain(dir))
+    }
+    val Seq(ivfDir, sqDir) = families.map(f => s"$root/${f.name}/idx")
+    def rejects(dir: String)(verb: => Unit): Unit = {
+      val before = AnnIndex.versionsOf(spark, dir)
+      val ex = intercept[IllegalArgumentException](verb)
+      assert(ex.getMessage.contains("is not an"), ex.getMessage)
+      assert(AnnIndex.versionsOf(spark, dir) == before)
+    }
+    rejects(sqDir)(AnnIndex.appendIvfPq(ids(0, 3), "vec_id", "embedding", sqDir))
+    rejects(ivfDir)(AnnIndex.appendSq(ids(0, 3), "vec_id", "embedding", ivfDir))
+    rejects(sqDir)(AnnIndex.mergeSq(spark, sqDir, ivfDir))
+    e.unpersist(): Unit
+  }
 }

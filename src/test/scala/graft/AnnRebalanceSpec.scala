@@ -192,7 +192,8 @@ class AnnRebalanceSpec extends AnyFunSuite {
     AnnIndex.appendIvfPq(extra, "vec_id", "embedding", dir)
     val exPin = intercept[java.util.ConcurrentModificationException](
       AnnIndex.splitCellsImpl(e, "vec_id", "embedding", dir,
-        Seq(hot -> subs), expectMid = Some(0L), hotOverride = None))
+        Seq(hot -> subs), expectMid = Some(0L), hotOverride = None,
+        kind = AnnIndex.IvfPqKind))
     assert(exPin.getMessage.contains("stale"), exPin.getMessage)
     assert(AnnIndex.load(spark, dir).nlist == skewedCentroids.length,
       "a refused split left a new model behind")
@@ -202,8 +203,9 @@ class AnnRebalanceSpec extends AnyFunSuite {
       graft.operators.Sq.fit(e, "embedding"), Some(skewedCentroids))
     AnnIndex.appendSq(extra, "vec_id", "embedding", sqDir)
     val exPinSq = intercept[java.util.ConcurrentModificationException](
-      AnnIndex.splitCellsSqImpl(e, "vec_id", "embedding", sqDir,
-        Seq(hot -> subs), expectMid = Some(0L), hotOverride = None))
+      AnnIndex.splitCellsImpl(e, "vec_id", "embedding", sqDir,
+        Seq(hot -> subs), expectMid = Some(0L), hotOverride = None,
+        kind = AnnIndex.Sq8Kind))
     assert(exPinSq.getMessage.contains("stale"), exPinSq.getMessage)
 
     // (b) END-TO-END through the policy: a competing append lands in

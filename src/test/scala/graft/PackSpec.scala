@@ -25,6 +25,35 @@ class PackSpec extends AnyFunSuite {
     assert(got == Map(1L -> 0L, 2L -> 10L, 3L -> 10L, 4L -> 15L, 5L -> 15L))
   }
 
+  test("prefixSum: a range partition holding only the null key sorts it first") {
+    // one null key plus three distinct keys under the 4 shuffle
+    // partitions: the null key gets a range partition of its own, and
+    // its collected upper bound — a bucket boundary — is null
+    import org.apache.spark.sql.expressions.Window
+    def check(rows: org.apache.spark.sql.DataFrame): Unit = {
+      val want = rows.withColumn("ps", coalesce(sum(col("v")).over(
+          Window.orderBy(col("k").asc_nulls_first)
+            .rowsBetween(Window.unboundedPreceding, -1L)), lit(0L)))
+        .select("v", "ps").as[(Long, Long)].collect.toMap
+      val got = Pack.prefixSum(rows.repartition(3), col("v"), "k", "ps")
+        .select("v", "ps").as[(Long, Long)].collect.toMap
+      assert(got == want)
+    }
+    check(Seq[(Option[String], Long)]((None, 1L), (Some("a"), 2L),
+      (Some("b"), 4L), (Some("c"), 8L)).toDF("k", "v"))
+    check(Seq[(Option[Double], Long)]((None, 1L), (Some(-3.0), 2L),
+      (Some(-2.0), 4L), (Some(-1.0), 8L)).toDF("k", "v"))
+    // the bucket itself: a null boundary lies below every non-null key
+    // (compared as 0.0 it would send -3.5 and -3.0 to bucket 0)
+    val keys = Seq[Option[Double]](None, Some(-3.5), Some(-3.0), Some(-2.5),
+      Some(-2.0), Some(-1.0), Some(0.5)).toDF("k")
+    val got = keys.select(col("k"), graft.plans.RangeBucket.bucket(col("k"),
+        Seq(null, -3.0, -2.0), org.apache.spark.sql.types.DoubleType))
+      .as[(Option[Double], Int)].collect.toMap
+    assert(got == Map(None -> 0, Some(-3.5) -> 1, Some(-3.0) -> 1,
+      Some(-2.5) -> 2, Some(-2.0) -> 2, Some(-1.0) -> 3, Some(0.5) -> 3))
+  }
+
   test("packByTokenBudget: offsets, sequence spans, boundary flag") {
     // budget 10; token counts 4,4,4 -> third doc spans tokens 8..11,
     // crossing the seq-0/seq-1 cut; an empty doc stays point-like
